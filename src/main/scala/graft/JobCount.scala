@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
@@ -50,10 +51,10 @@ object JobCount {
     val out = names.map { n =>
       // Listener events are posted asynchronously — drain before and
       // after each measured entry so counters attribute correctly.
-      Thread.sleep(500) // listener events post asynchronously; drain
+      GraftBus.drain(spark.sparkContext)
       val (j0, s0, t0) = (jobs, stages, tasks)
       byName(n).run(t).write.format("noop").mode("overwrite").save()
-      Thread.sleep(500) // listener events post asynchronously; drain
+      GraftBus.drain(spark.sparkContext)
       s""""$n":{"jobs":${jobs - j0},"stages":${stages - s0},"tasks":${tasks - t0}}"""
     }
     println("JOBCOUNT " + out.mkString("{", ",", "}"))

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.types.StructType
 
 /** Table registry over the driver-generated parquet dirs.
   *
@@ -11,6 +12,15 @@ import org.apache.spark.sql.functions.{col, expr}
   * the single-file parquet from TESTDATA.md. All readers are plain
   * `spark.read.parquet` so Catalyst keeps filter pushdown, column
   * pruning and partition pruning.
+  *
+  * Each table's schema is read once per `Tables`: a schema-less
+  * `spark.read.parquet` launches a footer-merge job on every call,
+  * before the query is even planned. Later reads pass the memoized
+  * schema, so they launch no job; each accessor call still returns a
+  * fresh relation (fresh exprIds, so self-joins keep resolving). The
+  * memo assumes `Tables` never writes under `dir` — a rewritten file
+  * needs a new `Tables`. `SparkEntry` builds a new `Tables` per call,
+  * so that path still infers once per table read.
   */
 final case class Tables(spark: SparkSession, dir: String) {
   // The engine's timestamp policy (NTZ files cast to session-UTC
@@ -28,8 +38,20 @@ final case class Tables(spark: SparkSession, dir: String) {
   }
   functions.GraftFunctions.register(spark)
 
-  private def t(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  private def path(name: String): String = s"$dir/$name.parquet"
+
+  private def t(name: String): DataFrame = {
+    val schema = schemas.computeIfAbsent(path(name),
+      p => spark.read.parquet(p).schema)
+    spark.read.schema(schema).parquet(path(name))
+  }
+
+  /** The memoized schema of `name`, once a read has filled it. */
+  private[graft] def memoizedSchema(name: String): Option[StructType] =
+    Option(schemas.get(path(name)))
 
   def region: DataFrame    = t("region")
   def nation: DataFrame    = t("nation")
@@ -52,6 +74,8 @@ final case class Tables(spark: SparkSession, dir: String) {
     *  - TimestampType → already the policy type, pass through. */
   def events: DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampType}
+    // Set before the first t("events"): the memoized schema is
+    // inferred under it, so a TIMESTAMP(NANOS) file stays LongType.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = t("events")
     raw.schema("ts").dataType match {

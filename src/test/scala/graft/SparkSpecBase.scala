@@ -7,6 +7,20 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpecBase.session
   lazy val t: Tables = Tables(spark, "/root/testdata/sf0.001")
+
+  /** Events with `ts` rewritten as raw int64 nanoseconds (the r1-r5
+    * encoding), 100 rows; written once and shared by the suites.
+    * Returns the dir to hand to `Tables`. */
+  def nanosEventsDir: String = {
+    val dir = "/tmp/graft_w9_nanos_events"
+    if (!new java.io.File(s"$dir/events.parquet/_SUCCESS").exists()) {
+      t.events.withColumn("ts",
+          org.apache.spark.sql.functions.expr("unix_micros(ts) * 1000"))
+        .limit(100).coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    }
+    dir
+  }
 }
 
 object SparkSpecBase {

@@ -111,13 +111,7 @@ class Wave9Spec extends SparkSpecBase {
     assert(t.events.schema("ts").dataType == TimestampType)
     // And from the raw-nanos layout (the r1-r5 encoding), rebuilt the
     // same way — written as int64 then read through the same branch.
-    val dir = "/tmp/graft_w9_nanos_events"
-    if (!new java.io.File(s"$dir/events.parquet/_SUCCESS").exists()) {
-      t.events.withColumn("ts", expr("unix_micros(ts) * 1000"))
-        .limit(100).coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    }
-    val nano = Tables(spark, dir).events
+    val nano = Tables(spark, nanosEventsDir).events
     assert(nano.schema("ts").dataType == TimestampType)
     assert(nano.count() == 100)
   }
